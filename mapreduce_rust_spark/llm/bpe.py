@@ -1,4 +1,4 @@
-"""Iterative BPE tokenizer training — the full merge-learning loop.
+r"""Iterative BPE tokenizer training — the full merge-learning loop.
 
 ``textanalysis.bpe_pair_counts`` computes ONE training iteration's
 candidate table; this module runs the actual algorithm (Sennrich et
@@ -11,30 +11,50 @@ training-data pipeline runs between corpus curation and tokenization.
 
 Scale shape: the corpus collapses ONCE to the (word, freq) vocabulary
 — after that every iteration is one map-side-combinable aggregation
-plus one JVM higher-order-function rewrite over vocabulary rows,
-never the raw text. Per-iteration driver traffic is exactly one row
-(the argmax pair — the k-means-centroid pattern, bounded by
-n_merges). Lineage is truncated per iteration with localCheckpoint,
-so the plan does not grow with merge count. At 100 TB the vocabulary
-is ~10⁸ rows and each iteration is a single agg + map over it.
+plus one string rewrite over vocabulary rows, never the raw text.
+Per-iteration driver traffic is exactly one row (the argmax pair —
+the k-means-centroid pattern, bounded by n_merges). Lineage is
+truncated per iteration with localCheckpoint, so the plan does not
+grow with merge count. At 100 TB the vocabulary is ~10⁸ rows and each
+iteration is a single agg + map over it.
 
-The greedy left-to-right non-overlapping merge semantics (standard
-BPE: "aaaa" + (a,a) → [aa, aa]) falls out of a single ``F.aggregate``
-fold: append the symbol, unless the accumulator tail equals the merge
-left AND the symbol equals the merge right — then replace the tail
-with the merged symbol. The fold is JVM whole-stage codegen, not a
-Python UDF. Greedy/overlap/tiebreak semantics are pinned against a
-pure-Python reference implementation in tests AND, since round 9,
-against a full SQL oracle: the argmax-per-iteration recursion IS
-expressible for a fixed merge budget as an unrolled MATERIALIZED-CTE
-chain (``_bpe_chain`` — the k-truss unroll discipline), with the
-greedy merge pass mirrored by a delimiter-wrapped ``replace``. Both
-bpe_train_merges and bpe_encode_docs are hash-checked end to end.
+The merge kernel is plain string functions, no arrays and no lambdas,
+so Catalyst compiles it into the scan's generated code:
+
+* **wrap** — ``regexp_replace(text, "(\S)", " $1 ")`` turns every
+  non-whitespace code point ``c`` into its own symbol ``" c "``;
+* **merge** — each learned merge is one ``replace(s, " l  r ",
+  " lr ")`` over the whole string;
+* **count** — each symbol adds exactly two spaces to the text, so a
+  string's symbol count is ``(length(s) - length(text)) / 2``.
+
+Why the space delimiter cannot collide with the data: tokens are the
+maximal ``\S`` runs (``WS_RE`` splits on ``\s+``, the same Java class),
+so no symbol ever contains whitespace. Inside a token two symbols are
+exactly two spaces apart; between tokens the gap is the original
+whitespace plus one space on each side — at least three whitespace
+characters — so ``" l  r "`` can only match two adjacent symbols of
+the same token, and a merge never crosses a token boundary. ``replace``
+scans forward and never rescans what it emitted, so each merge is
+exactly the greedy left-to-right non-overlapping pass of standard BPE
+("aaaa" + (a,a) → [aa, aa]). Java regex matches whole code points, so
+a supplementary-plane character (emoji) is one symbol, not two UTF-16
+surrogates, and ``length`` counts code points — the same symbols
+DuckDB's code-point ``string_split(w, '')`` gives.
+
+Greedy/overlap/tiebreak semantics are pinned against a pure-Python
+reference implementation in tests AND against a full SQL oracle: the
+argmax-per-iteration recursion IS expressible for a fixed merge budget
+as an unrolled MATERIALIZED-CTE chain (``_bpe_chain`` — the k-truss
+unroll discipline). The oracle deliberately keeps its own ``chr(31)``
+delimiter form of the same replace trick, so the two engines share no
+kernel code. Both bpe_train_merges and bpe_encode_docs are
+hash-checked end to end.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 N_MERGES = 8
@@ -45,6 +65,32 @@ def _word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (_tok_table(spark, sf_dir)
             .groupBy(F.col("tok").alias("w"))
             .agg(F.count("*").alias("freq")))
+
+
+def _wrap(text) -> Column:
+    """Every non-whitespace code point as its own ``" c "`` symbol
+    (module docstring)."""
+    return F.regexp_replace(text, r"(\S)", " $1 ")
+
+
+def _merge(s: Column, left: str, right: str) -> Column:
+    """One greedy left-to-right merge pass over a wrapped string."""
+    return F.replace(s, F.lit(f" {left}  {right} "),
+                     F.lit(f" {left}{right} "))
+
+
+def _encode(text, merges: list[tuple]) -> Column:
+    """The wrapped string after every learned merge, in training
+    order."""
+    s = _wrap(text)
+    for _step, left, right, _merged, _c in merges:
+        s = _merge(s, left, right)
+    return s
+
+
+def _symbols(s) -> Column:
+    """A wrapped single-token string's symbol array."""
+    return F.split(F.trim(s), "  ")
 
 
 # Session-scoped memo of the learned merge list. BOTH registered BPE
@@ -72,20 +118,14 @@ def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
     cached = _MERGES_MEMO.get(memo_key)
     if cached is not None:
         return list(cached)
-    # split each word into single-character symbols; the lookahead
-    # split emits a trailing "" (the pattern matches at end-of-string),
-    # which would otherwise become a phantom symbol
-    vocab = (words.select(
-                F.col("freq"),
-                F.filter(F.split(F.col("w"), "(?!^)"),
-                         lambda x: x != "").alias("syms"))
-                  .filter(F.size("syms") >= 1)
-                  # lazy (round 13): the first pair-count materializes
-                  # it inside its own job — the loop-body precedent
+    # lazy (round 13): the first pair-count materializes it inside
+    # its own job — the loop-body precedent
+    vocab = (words.select("freq", _wrap(F.col("w")).alias("s"))
                   .localCheckpoint(eager=False))
     merges: list[tuple] = []
     for step in range(1, n_merges + 1):
         pairs = (vocab
+                 .select("freq", _symbols("s").alias("syms"))
                  .filter(F.size("syms") >= 2)
                  .select("freq", F.explode(F.arrays_zip(
                      F.slice("syms", 1, F.size("syms") - 1).alias("l"),
@@ -98,22 +138,8 @@ def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
         if not top:
             break
         left, right, count = top[0]["l"], top[0]["r"], int(top[0]["c"])
-        merged = left + right
-        lit_l, lit_r, lit_m = F.lit(left), F.lit(right), F.lit(merged)
-        # greedy left-to-right fold (module docstring); the merged tail
-        # symbol never re-matches `left` within this pass unless the
-        # data genuinely contains it — exactly standard BPE semantics
-        vocab = (vocab.select(
-            "freq",
-            F.aggregate(
-                "syms",
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == lit_l) & (x == lit_r),
-                    F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                             F.array(lit_m)))
-                 .otherwise(F.concat(acc, F.array(x)))).alias("syms"))
+        vocab = (vocab.select("freq", _merge(F.col("s"), left, right)
+                              .alias("s"))
             # round 12: LAZY lineage cut — the next iteration's pair
             # count is the first action over the rewritten vocab, so a
             # non-eager checkpoint materializes it inside THAT job
@@ -121,7 +147,7 @@ def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
             # (halves the per-iteration job count; same k·V scale
             # shape — blocks are still pinned after first use)
             .localCheckpoint(eager=False))
-        merges.append((step, left, right, merged, count))
+        merges.append((step, left, right, left + right, count))
     _MERGES_MEMO[memo_key] = list(merges)
     return merges
 
@@ -135,30 +161,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pair_count long")
 
 
-def _apply_merges(syms_expr, merges: list[tuple]) -> F.Column:
-    """Compose the greedy merge fold for each learned merge, in
-    training order, over a symbol-array expression — the same
-    left-to-right semantics as training (module docstring), chained
-    as N_MERGES nested JVM folds (expression depth = merge count,
-    evaluated once per token)."""
-    def one_merge(lit_l, lit_r, lit_m):
-        # closure factory: PySpark inspects HOF lambda arity, so the
-        # merge literals must be captured, not default args
-        def fold(acc, x):
-            return F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == lit_l) & (x == lit_r),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(lit_m))) \
-                .otherwise(F.concat(acc, F.array(x)))
-        return fold
-
-    for _step, left, right, merged, _c in merges:
-        syms_expr = F.aggregate(
-            syms_expr, F.array().cast("array<string>"),
-            one_merge(F.lit(left), F.lit(right), F.lit(merged)))
-    return syms_expr
-
-
 def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLICATION: encode every document with the merge
     table ``bpe_train`` just learned — the deploy half of the
@@ -169,29 +171,23 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the merge table is tiny (N_MERGES rows, already
     driver-side from training — a real deployment broadcasts a stored
     ~10⁴-row table the same way) and is baked into the plan as
-    literals; encoding is then a ZERO-shuffle scan — per token, one
-    char split + N_MERGES chained JVM folds, no explode, no Python.
-    Per-doc totals come from an in-row sum, so nothing moves between
-    executors. Oracled since round 9: the merge table IS learnable
+    literals; encoding is then a ZERO-shuffle scan — per document, one
+    wrap plus N_MERGES ``replace`` passes over the whole text (the
+    module's string kernel), no split, no explode, no lambda, no
+    Python. Oracled since round 9: the merge table IS learnable
     relationally (``_bpe_chain`` unrolls the training loop), so the
-    oracle re-trains and re-encodes end to end; the encode fold is
+    oracle re-trains and re-encodes end to end; the kernel is
     additionally pinned against a pure-Python greedy-merge reference
     in tests/test_graph_bpe.py."""
-    from mapreduce_rust_spark.functions.text import WS_RE
     merges = bpe_train(_word_freqs(spark, sf_dir), N_MERGES)
     from mapreduce_rust_spark.tables import load_table
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
-
-    def encode_token(t):
-        syms = F.filter(F.split(t, "(?!^)"), lambda x: x != "")
-        return F.size(_apply_merges(syms, merges))
-
-    subword_counts = F.transform(toks, encode_token)
-    n_sub = F.aggregate(subword_counts, F.lit(0).cast("long"),
-                        lambda acc, x: acc + x)
-    d = docs.select("doc_id", F.size(toks).cast("long").alias("n_tokens"),
-                    n_sub.alias("n_subwords"))
+    n_sub = (F.length(_encode(F.col("text"), merges))
+             - F.length("text")) / 2
+    d = docs.select(
+        "doc_id",
+        F.regexp_count("text", F.lit(r"\S+")).cast("long").alias("n_tokens"),
+        n_sub.cast("long").alias("n_subwords"))
     # fertility = subwords emitted per whitespace token (≥ 1; lower =
     # better merge coverage), the standard tokenizer-quality metric
     return d.select(

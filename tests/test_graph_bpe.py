@@ -15,6 +15,7 @@ import pytest
 import random
 from collections import Counter
 
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 
@@ -130,6 +131,17 @@ def test_bpe_random_corpora_property(spark):
         assert _train_spark(spark, words, 5) == _bpe_reference(words, 5)
 
 
+def test_bpe_train_non_bmp_symbols_are_code_points(spark):
+    """A supplementary-plane character (emoji) is ONE symbol: a
+    UTF-16 split would learn merges of lone surrogates instead."""
+    corpus = {"\U0001F600\U0001F600": 3, "ab": 1}
+    got = _train_spark(spark, corpus, 2)
+    assert got == _bpe_reference(corpus, 2)
+    assert got == [(1, "\U0001F600", "\U0001F600",
+                    "\U0001F600\U0001F600", 3),
+                   (2, "a", "b", "ab", 1)]
+
+
 # --- snapshot diff -----------------------------------------------------
 
 def test_snapshot_diff_classifies_all_change_kinds(spark):
@@ -161,9 +173,9 @@ def test_snapshot_diff_null_never_collides_with_any_string(spark):
     assert got == {1: "update", 2: "update", 3: "unchanged"}
 
 
-def _encode_reference(word: str, merges) -> int:
+def _encode_symbols_reference(word: str, merges) -> list[str]:
     """Greedy left-to-right application of the learned merges, in
-    training order — subword count for one token."""
+    training order — the subwords of one token."""
     syms = list(word)
     for _step, l, r, merged, _c in merges:
         out, i = [], 0
@@ -173,7 +185,12 @@ def _encode_reference(word: str, merges) -> int:
             else:
                 out.append(syms[i]); i += 1
         syms = out
-    return len(syms)
+    return syms
+
+
+def _encode_reference(word: str, merges) -> int:
+    """Subword count for one token."""
+    return len(_encode_symbols_reference(word, merges))
 
 
 def test_bpe_encode_matches_reference(spark):
@@ -287,7 +304,8 @@ def test_bpe_encode_roundtrip_identity_on_corpus(spark):
     that ``bpe_encode_docs`` reports."""
     from mapreduce_rust_spark.functions.text import WS_RE
     from mapreduce_rust_spark.llm.bpe import (
-        N_MERGES, _apply_merges, _word_freqs, bpe_encode_docs, bpe_train)
+        N_MERGES, _encode, _symbols, _word_freqs, bpe_encode_docs,
+        bpe_train)
     from mapreduce_rust_spark.tables import load_table
     from tests.conftest import SF_SMOKE
 
@@ -296,8 +314,7 @@ def test_bpe_encode_roundtrip_identity_on_corpus(spark):
     toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
 
     def enc(t):
-        syms = F.filter(F.split(t, "(?!^)"), lambda x: x != "")
-        return _apply_merges(syms, merges)
+        return _symbols(_encode(t, merges))
 
     per_tok = docs.select(
         "doc_id", F.explode(toks).alias("tok")) \
@@ -312,6 +329,125 @@ def test_bpe_encode_roundtrip_identity_on_corpus(spark):
     for d, r in got.items():
         assert r.n_subwords == n_sub.get(d, 0)
         assert r.n_tokens <= r.n_subwords  # each token ≥ 1 subword
+
+
+# Java's \s — the class WS_RE splits tokens on. Python's \s would
+# also split on NBSP and \x1c-\x1f, which Spark keeps inside tokens.
+_JAVA_WS = r"[ \t\n\x0b\f\r]+"
+
+
+def _write_documents(root, texts):
+    import pandas as pd
+    pd.DataFrame({"doc_id": list(range(len(texts))),
+                  "source": ["a"] * len(texts),
+                  "text": texts}).to_parquet(f"{root}/documents.parquet")
+
+
+def _encode_docs_with(spark, root, texts, merges):
+    """bpe_encode_docs over a fresh documents table, encoding with
+    ``merges`` instead of the merges it would learn from it."""
+    from unittest import mock
+    from mapreduce_rust_spark.llm import bpe
+    _write_documents(root, texts)
+    with mock.patch.object(bpe, "bpe_train", lambda *_: merges):
+        df = bpe.bpe_encode_docs(spark, str(root))
+    return {r.doc_id: (r.n_tokens, r.n_subwords) for r in df.collect()}
+
+
+def test_bpe_encode_non_bmp_symbols_are_code_points(spark, tmp_path):
+    """An emoji is one symbol: split into UTF-16 surrogates, the
+    three emoji below would be six symbols that no merge matches,
+    ten subwords for the document instead of six."""
+    merges = [(1, "\U0001F600", "\U0001F600", "\U0001F600\U0001F600", 1),
+              (2, "\u00ef", "v", "\u00efv", 1)]
+    text = "\U0001F600\U0001F600\U0001F600 na\u00efve"
+    assert sum(_encode_reference(t, merges) for t in text.split()) == 6
+    assert _encode_docs_with(spark, tmp_path, [text], merges) == {0: (2, 6)}
+
+
+def test_bpe_queries_match_oracles_on_unicode_and_control_text(
+        spark, tmp_path):
+    r"""bpe_train_merges and bpe_encode_docs agree with their DuckDB
+    oracles on text mixing emoji, NBSP, tab/newline runs, leading
+    and trailing whitespace, a \x1f token and an empty document.
+    \x1f stands alone here: the oracles delimit symbols with chr(31)
+    themselves, so a \x1f inside a longer token would corrupt the
+    oracle's symbols (the property test below covers that case
+    against the Python reference)."""
+    import duckdb
+    from mapreduce_rust_spark.llm.bpe import (
+        _bpe_encode_oracle, _bpe_train_oracle, bpe_encode_docs,
+        bpe_train_merges)
+
+    e, nb = "\U0001F600", "\u00a0"
+    _write_documents(tmp_path, [
+        f"{e}{e}{e} na\u00efve\tcaf\u00e9\n{e}{e} ab{nb}ab",
+        f"\n\t ab{e}{e}  \t\n\n na\u00efve {nb}{e}{e}{nb} \x1f ",
+        "ab\tab\t\tcaf\u00e9 \x1f\n" + nb,
+        "",
+        " \t\n ",
+    ])
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet')")
+
+    got = [tuple(r) for r in bpe_train_merges(spark, str(tmp_path))
+           .orderBy("step").collect()]
+    want = [tuple(r) for r in con.execute(
+        _bpe_train_oracle() + " ORDER BY step").fetchall()]
+    assert got == want
+    assert any(m[3] == e + e for m in got)   # emoji pairs merge
+
+    got = {r.doc_id: (r.n_tokens, r.n_subwords, r.fertility)
+           for r in bpe_encode_docs(spark, str(tmp_path)).collect()}
+    want = {int(r["doc_id"]): (int(r["n_tokens"]), int(r["n_subwords"]),
+                               float(r["fertility"]))
+            for _, r in con.execute(_bpe_encode_oracle()).fetchdf()
+            .iterrows()}
+    assert got == want
+
+
+_SYM_CHARS = "ab\x1f\u00a0\u00ef\U0001F600"
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(st.text(alphabet=_SYM_CHARS + " \t\n", max_size=30),
+                      min_size=1, max_size=4),
+       picks=st.lists(st.tuples(st.integers(0, 63), st.integers(0, 63)),
+                      max_size=6))
+def test_bpe_kernel_matches_reference_property(spark, texts, picks):
+    r"""The string kernel equals the per-token greedy reference on
+    random texts: whitespace runs, leading/trailing whitespace and
+    characters that are NOT Java whitespace (\x1f, NBSP) or are
+    outside the BMP, under merges built from those same characters.
+    The symbol sequence of the whole wrapped text must be the
+    concatenation of the per-token encodings — a delimiter collision
+    or a merge across a token boundary would change it."""
+    import re
+    import tempfile
+    from mapreduce_rust_spark.llm.bpe import _encode
+
+    inventory, merges = list(_SYM_CHARS), []
+    for step, (i, j) in enumerate(picks, 1):
+        l, r = inventory[i % len(inventory)], inventory[j % len(inventory)]
+        merges.append((step, l, r, l + r, 1))
+        inventory.append(l + r)
+
+    want_syms, want_counts = [], {}
+    for d, txt in enumerate(texts):
+        toks = [t for t in re.split(_JAVA_WS, txt) if t]
+        syms = [s for t in toks for s in _encode_symbols_reference(t, merges)]
+        want_syms.append(syms)
+        want_counts[d] = (len(toks), len(syms))
+
+    with tempfile.TemporaryDirectory() as root:
+        assert _encode_docs_with(spark, root, texts, merges) == want_counts
+    got_syms = spark.createDataFrame([(t,) for t in texts], "text string") \
+        .select(F.regexp_extract_all(_encode(F.col("text"), merges),
+                                     F.lit(r"(\S+)"), 1).alias("s")) \
+        .collect()
+    assert [r.s for r in got_syms] == want_syms
 
 
 def test_pagerank_exact_tracks_float_pagerank(spark):

@@ -386,9 +386,11 @@ def test_round4_new_operator_plan_shapes(spark):
     plan = _plan(boolean_search_docs(spark, SF_CORRECT))
     assert "Exchange" not in plan
 
-    # BPE encode: after training, the encode itself is a pure scan
+    # BPE encode: after training, the encode itself is a pure scan,
+    # and a string kernel — no interpreted higher-order-function folds
     plan = _plan(bpe_encode_docs(spark, SF_CORRECT))
     assert "Exchange" not in plan
+    assert "lambdafunction" not in plan
 
     # DSIR: the λ table joins back via broadcast — the corpus-side
     # token stream must not shuffle for the join
